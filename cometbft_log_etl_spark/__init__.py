@@ -11,8 +11,9 @@ This package re-expresses every capability Spark-first:
 - ``operators/`` — converters + enrichment (internal/converter, internal/app)
 - ``plans/``     — plugin analytics as DataFrame transforms (ossplugins/*)
 - ``functions/`` — scalar helpers (lib/format.go, lib/parse.go, lib/time.go)
-- ``datapipe/``  — large-scale training-data ops (dedup, similarity, text stats)
-- ``queries/``   — the oracle-checkable query catalog exposed via __spark_entry__
+- ``queries/``   — the oracle-checkable query catalog exposed via __spark_entry__;
+  ``queries/datapipe.py`` holds the large-scale training-data ops (dedup,
+  similarity, text stats)
 - ``streaming/`` — Structured Streaming variants (parser.ParseStream parity)
 
 Everything is DataFrame/SQL-first: Catalyst plans the physical execution;

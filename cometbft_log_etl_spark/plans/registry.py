@@ -61,9 +61,7 @@ def plugins() -> dict[str, PluginFn]:
     return dict(_PLUGINS)
 
 
-def run_plugins(
-    events: DataFrame, enabled: list[str] | None = None, max_workers: int = 4
-) -> dict[str, DataFrame]:
+def run_plugins(events: DataFrame, enabled: list[str] | None = None) -> dict[str, DataFrame]:
     """Run each enabled plugin; returns the union of their result tables.
 
     An enabled-but-unregistered name is warned about and skipped, never
@@ -72,9 +70,10 @@ def run_plugins(
 
     Plugins are pure plan builders (no execution), but building nine
     deep plan trees is driver-side work — hundreds of py4j round-trips
-    each — so independent plugins build on a small thread pool (py4j
-    releases the GIL on socket I/O). Result ordering stays deterministic:
-    tables merge in `names` order regardless of completion order.
+    each — so independent plugins build on a 4-thread pool (py4j
+    releases the GIL on socket I/O). Result ordering stays
+    deterministic: tables merge in `names` order regardless of
+    completion order.
     """
     import logging
     from concurrent.futures import ThreadPoolExecutor
@@ -87,11 +86,8 @@ def run_plugins(
             logging.getLogger(__name__).warning(
                 "plugin %r not found in registry; continuing without it", name
             )
-    if max_workers > 1 and len(known) > 1:
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            built = dict(zip(known, pool.map(lambda n: reg[n](events), known)))
-    else:
-        built = {n: reg[n](events) for n in known}
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        built = dict(zip(known, pool.map(lambda n: reg[n](events), known)))
     out: dict[str, DataFrame] = {}
     for name in known:
         for table, df in built[name].items():
@@ -114,9 +110,10 @@ def two_phase_fanout(tables: dict, action, max_workers: int = 6) -> dict:
     cache-sharing family (CACHE_SHARING_PREFIX) serially first, then the
     independent rest concurrently — Spark's scheduler interleaves those
     jobs across executor slots, the shape that keeps a wide cluster busy
-    through many narrow stages. Shared by the production sink fan-out
-    (pipeline.run_pipeline) and the bench count path (tools/bench_etl)
-    so the first-touch discipline can't drift between them.
+    through many narrow stages. Shared by every sink fan-out of
+    pipeline.run_pipeline (the one ETL driver; the CLI calls it) and
+    the bench count path (tools/bench_etl), so the first-touch
+    discipline can't drift between them.
 
     Returns {table: action result} in ``tables`` order. Fail-fast with
     full diagnostics: the first exception is re-raised after the pool

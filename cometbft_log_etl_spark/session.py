@@ -126,6 +126,31 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     return _PersistSnapshot(ids, _TRACKED_PERSISTS)
 
 
+def release_tracked_persists(before: set[int]) -> int:
+    """Unpersist, through the CacheManager, every persist_tracked
+    DataFrame created since the ``before`` snapshot (non-blocking);
+    returns how many were released. Unlike release_new_persists, no
+    raw-RDD sweep: localCheckpoint blocks that returned frames still
+    read stay pinned. A plain set (no snapshot attrs) releases
+    nothing."""
+    prior_ids = getattr(before, "tracked_ids", None)
+    if prior_ids is None:
+        return 0
+    released = 0
+    keep = []
+    for df in _TRACKED_PERSISTS:
+        if id(df) in prior_ids:
+            keep.append(df)
+            continue
+        try:
+            df.unpersist(False)
+            released += 1
+        except Exception:
+            pass  # session already stopped
+    _TRACKED_PERSISTS[:] = keep
+    return released
+
+
 def release_new_persists(spark: SparkSession, before: set[int]) -> int:
     """Unpersist everything persisted since the ``before`` snapshot
     (non-blocking); returns how many were released.
@@ -144,20 +169,7 @@ def release_new_persists(spark: SparkSession, before: set[int]) -> int:
     DataFrames rather than all of them — the documented 'must not drop
     OTHER work's caches' contract for external callers that build
     their own id set (round-10 advice)."""
-    released = 0
-    prior_ids = getattr(before, "tracked_ids", None)
-    if prior_ids is not None:
-        keep = []
-        for df in _TRACKED_PERSISTS:
-            if id(df) in prior_ids:
-                keep.append(df)
-                continue
-            try:
-                df.unpersist(False)
-                released += 1
-            except Exception:
-                pass  # session already stopped; the RDD sweep still runs
-        _TRACKED_PERSISTS[:] = keep
+    released = release_tracked_persists(before)
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for rid in list(jmap.keySet().toArray()):
         if rid not in before:

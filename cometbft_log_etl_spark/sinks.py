@@ -20,11 +20,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def lake_root(out_dir: str, sim_id: str) -> str:
+    """``<out_dir>/<sim_id>`` — the database-per-simulation directory
+    (O4) every lake writer, batch or streaming, puts its tables in."""
+    return f"{out_dir.rstrip('/')}/{sim_id}"
+
+
 class ParquetResultSink:
     """Table-per-result-family parquet layout under <out>/<sim_id>/."""
 
     def __init__(self, out_dir: str, sim_id: str):
-        self.root = f"{out_dir.rstrip('/')}/{sim_id}"
+        self.root = lake_root(out_dir, sim_id)
 
     def store(self, name: str, df: DataFrame) -> None:
         df.write.mode("overwrite").parquet(f"{self.root}/{name}")

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline import generate_sim_id
+from ..sinks import lake_root
 from .ingest import stream_events
 
 
@@ -64,7 +65,7 @@ def stream_events_to_lake(
     running. Returns ``(query, root)`` — callers own
     ``query.awaitTermination()``.
     """
-    root = f"{out_dir.rstrip('/')}/{sim_id or generate_sim_id()}"
+    root = lake_root(out_dir, sim_id or generate_sim_id())
     events = stream_events(spark, log_dir, strict=strict, max_files_per_trigger=max_files_per_trigger)
     writer = events
     if partition_by_date:

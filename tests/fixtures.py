@@ -350,3 +350,16 @@ def write_logs(sc: Scenario, out_dir: str) -> str:
             for _, line in entries:
                 f.write(line + "\n")
     return out_dir
+
+
+def plugin_table_names(spark, events) -> set[str]:
+    """Names of the tables the default-enabled plugins emit over
+    ``events`` (plans are built, not run; the intermediates they pin
+    are released again)."""
+    from cometbft_log_etl_spark.plans.registry import run_plugins
+    from cometbft_log_etl_spark.session import persistent_rdd_ids, release_new_persists
+
+    before = persistent_rdd_ids(spark)
+    names = set(run_plugins(events))
+    release_new_persists(spark, before)
+    return names

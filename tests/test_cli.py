@@ -12,7 +12,7 @@ import pytest
 
 from cometbft_log_etl_spark.__main__ import main
 
-from .fixtures import build_scenario, write_logs
+from .fixtures import build_scenario, plugin_table_names, write_logs
 
 
 @pytest.fixture(scope="module")
@@ -67,3 +67,56 @@ def test_cli_rejects_bad_arg_combos(log_dir):
         main(["--dir", log_dir])  # no destination
     with pytest.raises(SystemExit):
         main(["--dir", log_dir, "--stream", "--mongo-uri", "mongodb://x:1"])
+
+
+def test_cli_plugins_list_tolerates_spaces(spark, log_dir, tmp_path):
+    """`--plugins "a, b"` enables both plugins: names are stripped, so the
+    second one is not skipped as an unknown ' b'."""
+    out = str(tmp_path / "lake")
+    assert main(["--dir", log_dir, "--out", out, "--simulation", "sp",
+                 "--plugins", "vote-latency, network-latency,"]) == 0
+    tables = _tables(f"{out}/sp")
+    assert "vote_latencies" in tables
+    assert {t for t in tables if t.startswith("network_latency_")}, tables
+
+
+def _digests(spark, root: str, tables: set[str]) -> dict[str, tuple]:
+    """(rows, sum of row hashes) per table, in one job: independent of row
+    and column order, doubles rounded to 6 decimals, maps hashed as their
+    key-sorted entries, partition column ``event_date`` left out."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    frames = []
+    for t in sorted(tables):
+        df = spark.read.parquet(f"{root}/{t}").drop("event_date")
+        cols = []
+        for f in sorted(df.schema.fields, key=lambda f: f.name):
+            c = F.col(f"`{f.name}`")
+            if isinstance(f.dataType, T.DoubleType):
+                c = F.round(c, 6)
+            elif isinstance(f.dataType, T.MapType):
+                c = F.array_sort(F.map_entries(c))
+            cols.append(c)
+        frames.append(df.select(F.xxhash64(*cols).cast("decimal(38,0)").alias("h")).agg(
+            F.lit(t).alias("t"), F.count(F.lit(1)).alias("n"), F.sum("h").alias("d")))
+    return {r.t: (r.n, r.d) for r in reduce(lambda a, b: a.unionByName(b), frames).collect()}
+
+
+def test_cli_partition_by_date_matches_unpartitioned(spark, log_dir, tmp_path):
+    """Batch --partition-by-date: events gain an event_date column, every
+    plugin table is written, and every table has the same digest as in
+    the unpartitioned run."""
+    out = str(tmp_path / "lake")
+    assert main(["--dir", log_dir, "--out", out, "--simulation", "flat"]) == 0
+    assert main(["--dir", log_dir, "--out", out, "--simulation", "dated",
+                 "--partition-by-date"]) == 0
+
+    flat, dated = _tables(f"{out}/flat"), _tables(f"{out}/dated")
+    ev = spark.read.parquet(f"{out}/dated/events")
+    assert flat == dated == {"events"} | plugin_table_names(spark, ev)
+    assert "event_date" in ev.columns
+    assert ev.filter("event_date != to_date(timestamp)").count() == 0
+    assert _digests(spark, f"{out}/dated", dated) == _digests(spark, f"{out}/flat", flat)

@@ -723,7 +723,7 @@ def audit_plugins(spark) -> list[str]:
     import shutil
     import tempfile
 
-    from cometbft_log_etl_spark.pipeline import etl_events, write_events
+    from cometbft_log_etl_spark.pipeline import etl_events, read_events, write_events
     from cometbft_log_etl_spark.plans.registry import run_plugins
     from cometbft_log_etl_spark.session import persistent_rdd_ids, release_new_persists
     from tests.fixtures import build_scenario, write_logs
@@ -737,9 +737,7 @@ def audit_plugins(spark) -> list[str]:
         root = os.path.join(work, "lake")
         staged_src = etl_events(spark, logdir)
         write_events(staged_src, root)
-        events = spark.read.schema(staged_src.schema).parquet(
-            os.path.join(root, "events")
-        )
+        events = read_events(spark, root, staged_src.schema)
         tables = run_plugins(events)
         for n in sorted(set(PLUGIN_EXPECTATIONS) - set(tables)):
             failures.append(f"plugin table {n!r} gated but not produced")

@@ -148,8 +148,8 @@ def _one_etl_run(spark, logdir: str, lake_root: str, n_lines: int) -> dict:
 
     t0 = time.time()
     # Eager localCheckpoint (not .cache()): truncated lineage halves
-    # the 15-table fan-out's planning + job overhead — see etl_events.
-    events = etl_events(spark, logdir, materialize=True)
+    # the 15-table fan-out's planning + job overhead — see run_pipeline.
+    events = etl_events(spark, logdir).localCheckpoint(eager=True)
     n_events = events.count()
     t_etl = time.time() - t0
 
@@ -172,13 +172,11 @@ def _one_etl_run(spark, logdir: str, lake_root: str, n_lines: int) -> dict:
     # in-memory and the staged shape (the staged one is what a lake
     # deployment runs, and it wins from ~10^6 rows up).
     t2 = time.time()
-    from cometbft_log_etl_spark.pipeline import write_events
+    from cometbft_log_etl_spark.pipeline import read_events, write_events
 
     staged_src = etl_events(spark, logdir)
     write_events(staged_src, lake_root)
-    staged = spark.read.schema(staged_src.schema).parquet(
-        os.path.join(lake_root, "events")
-    )
+    staged = read_events(spark, lake_root, staged_src.schema)
     t_staged_etl = time.time() - t2
     t3 = time.time()
     scounts = count_tables(run_plugins(staged))
